@@ -25,11 +25,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # session at a time. Track the current one and re-register (unpersisting the
 # previous domain caches) whenever a query targets a different sf_dir — the
 # driver mixes sf0.001 (entry smoke) and sf0.01 (oracle gate) on one session.
-# Registered as session memos FROM operators.common (which imports this
-# module, so the registration lives there to avoid the import cycle):
-# after common.reset_session_state (the plan-fingerprint gate) the guard
-# must NOT short-circuit, or the domain views stay registered-but-uncached
-# — a shape neither a fresh nor a warm session ever has.
+# operators.common.reset_session_state clears both dicts with its memos.
 _CURRENT_SF: dict[tuple[str, int], str] = {}
 _CACHED_DFS: dict[tuple[str, int], list[DataFrame]] = {}
 
@@ -47,14 +43,6 @@ def register(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, cache_domain: bo
             df.unpersist()
         except Exception:
             pass
-    if sid in _CURRENT_SF:
-        # sf_dir SWITCH: the operator memos keyed on the old sf_dir can
-        # never be read again (temp views are single-sf_dir per session) —
-        # unpersist their cached blocks too, not just the domain views
-        # (ADVICE r11; late import: operators.common imports this module)
-        from .operators.common import evict_other_sf_memos
-
-        evict_other_sf_memos(spark, sf_dir)
     from .session import tune_session
 
     tune_session(spark)
@@ -80,6 +68,12 @@ def register(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, cache_domain: bo
     _register_defs_full(spark)
     _CURRENT_SF[sid] = sf_dir
     _CACHED_DFS[sid] = cached
+    # the memos of an sf_dir no session of this app still has registered
+    # (the old one, after a switch) can never be read again: unpersist
+    # their blocks too (late import: operators.common imports this module)
+    from .operators.common import evict_unregistered_memos
+
+    evict_unregistered_memos(sid[0])
 
 
 def _register_defs_full(spark: SparkSession) -> None:

@@ -52,13 +52,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import app_key, session_memo, t
+from .common import memo, t
 
 BPE_MERGES = 12
-
-# both bpe queries share one trained trajectory per (session, sf_dir):
-# (merge_table_df, final_state_df), both localCheckpoint-backed
-_BPE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = session_memo({})
 
 _FOLD_MERGE = """
 aggregate(
@@ -72,9 +68,13 @@ aggregate(
 
 
 def _train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = (app_key(spark), sf_dir)
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key]
+    """(merge_table_df, final_state_df), both localCheckpoint-backed —
+    one trained trajectory per (session, sf_dir), shared by the bpe
+    queries."""
+    return memo(spark, sf_dir, "bpe_merges", lambda: _train_merges(spark, sf_dir))
+
+
+def _train_merges(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     docs = t(spark, sf_dir, "documents")
     state = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
@@ -137,8 +137,7 @@ def _train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         F.col("cnt").alias("pair_weight"),
         "tokens_after",
     ).localCheckpoint()
-    _BPE_CACHE[key] = (merges, state)
-    return _BPE_CACHE[key]
+    return merges, state
 
 
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

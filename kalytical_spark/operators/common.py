@@ -72,24 +72,50 @@ def app_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
-# Central registry of session-scoped memo dicts. Modules wrap their memo
-# dicts in session_memo() so hermetic tooling (the plan-fingerprint gate)
-# can reset a long-lived session to fresh-build state: a warm memo returns
-# a frame whose caches clearCache() already dropped, which executes in a
-# THIRD shape that is neither cold nor warm — reset_session_state clears
-# both layers so the next build caches exactly like a fresh session.
-SESSION_MEMOS: list[dict] = []
+# The one session memo of every shared build (index fits, verified pair
+# sets, ledgers, the event log's "now"): (app_key, sf_dir, name, extra)
+# -> value. See memo().
+_MEMOS: dict[tuple, object] = {}
 
 
-def session_memo(d: dict) -> dict:
-    SESSION_MEMOS.append(d)
-    return d
+def memo(spark: SparkSession, sf_dir: str, name: str, build, *extra):
+    """Return the value memoized under (app_key(spark), sf_dir, name,
+    extra), or call ``build()`` once and store its result. ``name`` names
+    the build (bench.py times the shared ones as ``memo:<name>``);
+    ``extra`` carries any further build parameter.
+
+    Eviction: when a session switches sf_dir (catalog.register), the
+    entries of that session's app whose sf_dir no session of the app
+    still has registered are unpersisted and dropped — temp views are
+    single-sf_dir per session, so no session can read them again — while
+    an sf_dir a sibling session still has registered keeps its entries.
+    reset_session_state drops every entry."""
+    key = (app_key(spark), sf_dir, name, extra)
+    if key not in _MEMOS:
+        _MEMOS[key] = build()
+    return _MEMOS[key]
+
+
+def evict_unregistered_memos(app: str) -> None:
+    """memo()'s sf_dir-switch rule: unpersist and drop the app's entries
+    whose sf_dir no session of the app has registered."""
+    live = {sf for (a, _), sf in catalog._CURRENT_SF.items() if a == app}
+    for key in [k for k in _MEMOS if k[0] == app and k[1] not in live]:
+        _unpersist_value(_MEMOS.pop(key))
 
 
 def reset_session_state(spark: SparkSession) -> None:
+    """Return a long-lived session to fresh-build state for hermetic
+    tooling (the plan-fingerprint gate): a warm memo returns a frame whose
+    caches clearCache() already dropped, which executes in a THIRD shape
+    that is neither cold nor warm — so the memos go too, and catalog's
+    registration guard with them (if the guard survived, domain views
+    would stay registered-but-uncached, a shape neither a fresh nor a
+    warm session ever has)."""
     spark.catalog.clearCache()
-    for d in SESSION_MEMOS:
-        d.clear()
+    _MEMOS.clear()
+    catalog._CURRENT_SF.clear()
+    catalog._CACHED_DFS.clear()
 
 
 def _unpersist_value(v) -> None:
@@ -101,28 +127,6 @@ def _unpersist_value(v) -> None:
     elif isinstance(v, (tuple, list)):
         for item in v:
             _unpersist_value(item)
-
-
-def evict_other_sf_memos(spark: SparkSession, keep_sf_dir: str) -> None:
-    """Drop this session's memoized frames for every OTHER sf_dir (ADVICE
-    r11): catalog.register() unpersists the domain caches when a session
-    switches sf_dir, but the operator memos (verified pairs, exact top-k
-    baselines, CC labels, ...) are keyed (app, sf_dir) and survived the
-    switch — in a mixed-sf session (the driver's smoke + gate flow) their
-    cached blocks accumulated. Temp views are single-sf_dir per session by
-    contract, so a stale-sf memo can never be read again legitimately;
-    unpersist its blocks and forget it."""
-    app = app_key(spark)
-    for d in SESSION_MEMOS:
-        for key in list(d):
-            if (
-                isinstance(key, tuple)
-                and len(key) == 2
-                and key[0] == app
-                and isinstance(key[1], str)
-                and key[1] != keep_sf_dir
-            ):
-                _unpersist_value(d.pop(key))
 
 
 def eager_cache(df: DataFrame) -> DataFrame:
@@ -142,9 +146,9 @@ def eager_cache(df: DataFrame) -> DataFrame:
 
 def materialize_session_caches(spark: SparkSession) -> None:
     """Force-materialize every session-tracked cached DataFrame (catalog
-    domain views + any DataFrame held in a session memo, including tuple
-    values). Used by the plan-fingerprint gate after building a query so
-    the measured executed plan is the deterministic WARM shape — no cache
+    domain views + any DataFrame held in a memo, including tuple values).
+    Used by the plan-fingerprint gate after building a query so the
+    measured executed plan is the deterministic WARM shape — no cache
     materializes mid-query, so AQE cannot race on cache statistics."""
 
     def _count(v) -> None:
@@ -157,23 +161,8 @@ def materialize_session_caches(spark: SparkSession) -> None:
             for item in v:
                 _count(item)
 
-    for dfs in list(catalog._CACHED_DFS.values()):
-        _count(dfs)
-    for d in SESSION_MEMOS:
-        for v in list(d.values()):
-            _count(v)
-
-
-# catalog's registration guard and cache list are session memos too (the
-# registration lives HERE because catalog is imported above — a
-# session_memo import from catalog.py would be circular): if the guard
-# survived a reset, domain views would stay registered-but-uncached, a
-# shape neither a fresh nor a warm session ever has.
-SESSION_MEMOS.append(catalog._CURRENT_SF)
-SESSION_MEMOS.append(catalog._CACHED_DFS)
-
-
-_NOW_CACHE: dict[tuple[str, str], object] = session_memo({})
+    for v in list(catalog._CACHED_DFS.values()) + list(_MEMOS.values()):
+        _count(v)
 
 
 def now_expr(spark: SparkSession, sf_dir: str) -> Column:
@@ -182,11 +171,12 @@ def now_expr(spark: SparkSession, sf_dir: str) -> Column:
     (data_provider.py:130,135; job_culler.py:22,35). Memoized per
     (session, sf_dir) — otherwise every time-based query pays an extra
     aggregate job just to build its expression."""
-    key = (app_key(spark), sf_dir)
-    if key not in _NOW_CACHE:
+
+    def build():
         catalog.register(spark, sf_dir)
-        _NOW_CACHE[key] = spark.table("events_ms").agg(F.max("ts")).collect()[0][0]
-    return F.lit(_NOW_CACHE[key])
+        return spark.table("events_ms").agg(F.max("ts")).collect()[0][0]
+
+    return F.lit(memo(spark, sf_dir, "now", build))
 
 
 SQL_NOW = "(SELECT max(ts) FROM events_ms)"

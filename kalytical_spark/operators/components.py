@@ -25,17 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import app_key, session_memo
+from .common import memo
 from .dedup import LSH_VERIFY_THRESHOLD, _sql_minhash_lsh_ctes, dedup_minhash_lsh
 
 MAX_CC_ITERS = 50
-
-# session-scoped memo: dedup_cluster_components and dedup_cluster_summary
-# share one labels computation per sf_dir (replay._DECISIONS_CACHE
-# precedent); the labels DataFrame stays cached. Keyed by (session,
-# sf_dir) — a bare sf_dir key would hand a dead DataFrame to a new session.
-_CC_CACHE: dict[tuple[int, str], DataFrame] = session_memo({})
-
 
 def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected near-dup edge list from the verified LSH pairs."""
@@ -47,10 +40,13 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, component_id) for every document in at least one near-dup
-    pair; component_id = min doc_id of the component."""
-    memo_key = (app_key(spark), sf_dir)
-    if memo_key in _CC_CACHE:
-        return _CC_CACHE[memo_key]
+    pair; component_id = min doc_id of the component. Memoized:
+    dedup_cluster_components, dedup_cluster_summary and the keeper
+    selection share one labels computation per (session, sf_dir)."""
+    return memo(spark, sf_dir, "cc_labels", lambda: _label_components(spark, sf_dir))
+
+
+def _label_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _ckpt_rdd_id(df: DataFrame) -> int:
         """The checkpointed RDD id behind a localCheckpoint'ed frame (its
         analyzed plan is a LogicalRDD wrapping exactly that RDD)."""
@@ -125,10 +121,7 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         prev_sum = new_sum
     edges.unpersist()
-    _CC_CACHE[memo_key] = labels.select(
-        "doc_id", F.col("label").alias("component_id")
-    )
-    return _CC_CACHE[memo_key]
+    return labels.select("doc_id", F.col("label").alias("component_id"))
 
 
 _SQL_CC = f"""WITH RECURSIVE {_sql_minhash_lsh_ctes()},
@@ -185,7 +178,7 @@ def dedup_keeper_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus plus one per-component window."""
     from pyspark.sql import Window as W
 
-    from .common import app_key, t
+    from .common import t
 
     cc = _components(spark, sf_dir)
     docs = t(spark, sf_dir, "documents").select(

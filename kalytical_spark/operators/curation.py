@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .common import app_key, session_memo, t
+from .common import memo, t
 from .dedup import (
     LSH_VERIFY_THRESHOLD,
     _sql_minhash_lsh_ctes,
@@ -47,20 +47,18 @@ assert NEAR_DUP_JACCARD >= LSH_VERIFY_THRESHOLD, (
 )
 
 
-# session-scoped memo of the fate ledger: four query families consume it
-# (the ledger itself, the curation summary, and the two training-mix
-# builds) — without it each re-runs the quality window + dup resolution.
-# Cached lazily (one per-doc row; tiny); keyed by (session, sf_dir) like
-# dedup._PAIR_CACHE / components._CC_CACHE.
-_FATE_CACHE: dict[tuple[int, str], DataFrame] = session_memo({})
-
-
 def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document fate ledger: kept | dropped_quality | dropped_exact_dup |
-    dropped_near_dup, with the token count that drove the quality decision."""
-    memo_key = (app_key(spark), sf_dir)
-    if memo_key in _FATE_CACHE:
-        return _FATE_CACHE[memo_key]
+    dropped_near_dup, with the token count that drove the quality decision.
+
+    Memoized and cached lazily (one per-doc row; tiny): four query
+    families consume it (the ledger itself, the curation summary, and the
+    two training-mix builds) — without it each re-runs the quality window
+    + dup resolution."""
+    return memo(spark, sf_dir, "curation_fates", lambda: _fates(spark, sf_dir))
+
+
+def _fates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n_tokens = F.size(toks).cast("bigint")
@@ -116,8 +114,7 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("fate"),
         )
     )
-    _FATE_CACHE[memo_key] = fate.cache()
-    return _FATE_CACHE[memo_key]
+    return fate.cache()
 
 
 # the shared CTE chain ENDING IN the fate table: both curation oracles and

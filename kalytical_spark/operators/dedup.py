@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import app_key, session_memo, t
+from .common import eager_cache, memo, t
 
 N_MINHASH = 16
 N_BANDS = 8  # rows-per-band = 2
@@ -202,7 +202,7 @@ def _minhash_slice_cols() -> list:
     uses for its permutation family). One md5 + 16 integer multiply-adds
     replaces r9's 4 md5 evaluations per shingle, and the min-aggregates
     fold BIGINTs instead of hex strings (hash- instead of
-    sort-aggregable — PLANS.md r10 re-pin; same-day A/B at docs:k30:
+    sort-aggregable — BENCH_NOTES.md r10 re-pin; same-day A/B at docs:k30:
     17.0 -> 5.4 s warm median). h1 + 15*h2 < 2^36, so the arithmetic
     never overflows a BIGINT and the mod never sees a negative. DuckDB
     derives identical values from the same hex slices
@@ -235,37 +235,20 @@ def sql_minhash_sig_select(source: str = "sh", with_n_sh: bool = True) -> str:
   GROUP BY doc_id"""
 
 
-# session-scoped memo of the verified pair set: the LSH mine is the shared
-# upstream of three query families (dedup_minhash_lsh itself, the
-# connected-components clustering, and the curation pipeline) — without it
-# each caller repays the full shingle->minhash->band->verify cost. The
-# result is a few hundred rows; the candidate intermediates are unpersisted
-# once it materializes. Keyed by (session, sf_dir) like common._NOW_CACHE.
-_PAIR_CACHE: dict[tuple[int, str], DataFrame] = session_memo({})
-
-# ...and of the signature tables themselves: (shingles, banded long) are
-# the STORED INDEX artifact of the LSH family — production persists them
-# per ingest and appends deltas. The full mine and the incremental delta
-# mine (dedup_incremental.py) share one cached build per session instead
-# of each re-shingling the corpus. The shingle set is its own memo layer:
-# the prefix-filter join (setsim.py), the exhaustive miners and the
+# The signature tables (shingles, banded long) are the STORED INDEX
+# artifact of the LSH family — production persists them per ingest and
+# appends deltas. The full mine and the incremental delta mine
+# (dedup_incremental.py) share one memoized build per session instead of
+# each re-shingling the corpus. The shingle set is its own memo layer: the
+# prefix-filter join (setsim.py), the exhaustive miners and the
 # calibration rebuild consume ONLY shingles, and charging them the
 # minhash/banding build too cost a measured 29s of the textdedup k100
 # sweep leg for an artifact that chain never reads.
-_SH_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
-_SIG_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = session_memo({})
-
-
 def shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached, materialized (doc_id, shingle) set — the shared base layer
     of every shingle consumer; banded minhash signatures stack on top via
     signature_tables for the callers that need them."""
-    key = (app_key(spark), sf_dir)
-    if key not in _SH_CACHE:
-        sh = _shingles_df(spark, sf_dir).cache()
-        sh.count()
-        _SH_CACHE[key] = sh
-    return _SH_CACHE[key]
+    return memo(spark, sf_dir, "shingles", lambda: eager_cache(_shingles_df(spark, sf_dir)))
 
 
 def signature_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -273,13 +256,12 @@ def signature_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataF
     (doc_id, n_sh, band_idx, band_key) band table, both materialized —
     `long` because the band self-join scans it twice and a bare count()
     would not materialize the pruned-away minhash aggregates."""
-    key = (app_key(spark), sf_dir)
-    if key not in _SIG_CACHE:
+
+    def build():
         sh = shingle_table(spark, sf_dir)
-        long = banded_signatures(sh).cache()
-        long.count()
-        _SIG_CACHE[key] = (sh, long)
-    return _SIG_CACHE[key]
+        return sh, eager_cache(banded_signatures(sh))
+
+    return memo(spark, sf_dir, "lsh_signatures", build)
 
 
 def banded_signatures(sh: DataFrame) -> DataFrame:
@@ -314,19 +296,25 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup mining (the scale path): 16 minhashes per doc
     -> 8 bands of 2 -> candidate pairs within band buckets -> verified with
     exact Jaccard >= 0.7. At 100 TB the expensive all-pairs join never
-    happens; only band-bucket collisions are compared."""
-    memo_key = (app_key(spark), sf_dir)
-    if memo_key in _PAIR_CACHE:
-        return _PAIR_CACHE[memo_key]
-    cand = _lsh_candidates(spark, sf_dir).cache()
-    cand.count()  # cand feeds both the intersection and the final join
-    result = lsh_pairs_plan(spark, sf_dir, cand).cache()
-    result.count()  # materialize so the candidate table can be released
-    # sh/long stay cached in _SIG_CACHE (the shared index artifact); only
-    # the mine-private candidate table is dropped
-    cand.unpersist()
-    _PAIR_CACHE[memo_key] = result
-    return result
+    happens; only band-bucket collisions are compared.
+
+    Memoized: the LSH mine is the shared upstream of three query families
+    (dedup_minhash_lsh itself, the connected-components clustering, and
+    the curation pipeline) — without it each caller repays the full
+    shingle->minhash->band->verify cost. The result is a few hundred rows;
+    the candidate intermediates are unpersisted once it materializes."""
+
+    def build():
+        # cand feeds both the intersection and the final join
+        cand = eager_cache(_lsh_candidates(spark, sf_dir))
+        # materialize so the candidate table can be released
+        result = eager_cache(lsh_pairs_plan(spark, sf_dir, cand))
+        # sh/long stay memoized (the shared index artifact); only the
+        # mine-private candidate table is dropped
+        cand.unpersist()
+        return result
+
+    return memo(spark, sf_dir, "lsh_pairs", build)
 
 
 def _lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -48,15 +48,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .common import app_key, session_memo, t
+from .common import eager_cache, memo, t
 from .kmeans_ivf import K_CELLS, N_PROBE, _normalized, fit_kmeans_cells, make_pair_scorer, make_probe
 from .similarity import QUERY_STRIDE, TOP_K
 
 IVF_DELTA_MOD = 10  # vec_id % 10 == 0 is "today's shard" (~10% of vectors)
 IVF_INCR_RECALL_FLOOR_MILLI = 400
-
-# session memo: summary + recall report share one maintained index
-_INCR_CACHE: dict[tuple[int, str], tuple[DataFrame, "object"]] = session_memo({})
 
 
 def _assign_under(spark: SparkSession, vecs: DataFrame, C) -> DataFrame:
@@ -82,18 +79,17 @@ def _assign_under(spark: SparkSession, vecs: DataFrame, C) -> DataFrame:
 
 def _maintained_index(spark: SparkSession, sf_dir: str):
     """(assignments DataFrame [vec_id, cell] over base+delta, centroids)
-    — the incrementally maintained IVF index."""
-    key = (app_key(spark), sf_dir)
-    if key in _INCR_CACHE:
-        return _INCR_CACHE[key]
-    base_assign, C = fit_kmeans_cells(spark, sf_dir, exclude_delta_mod=IVF_DELTA_MOD)
-    emb = t(spark, sf_dir, "embeddings")
-    delta = _normalized(emb.filter(F.col("vec_id") % IVF_DELTA_MOD == 0))
-    delta_assign = _assign_under(spark, delta, C)
-    assignments = base_assign.unionByName(delta_assign).cache()
-    assignments.count()
-    _INCR_CACHE[key] = (assignments, C)
-    return _INCR_CACHE[key]
+    — the incrementally maintained IVF index, memoized: the summary and
+    the recall report share it."""
+
+    def build():
+        base_assign, C = fit_kmeans_cells(spark, sf_dir, exclude_delta_mod=IVF_DELTA_MOD)
+        emb = t(spark, sf_dir, "embeddings")
+        delta = _normalized(emb.filter(F.col("vec_id") % IVF_DELTA_MOD == 0))
+        assignments = base_assign.unionByName(_assign_under(spark, delta, C))
+        return eager_cache(assignments), C
+
+    return memo(spark, sf_dir, "ivf_incremental_index", build)
 
 
 BOUNDARY_BASE_SAMPLE = 4096  # stored-base rows re-audited per proof run

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .common import app_key, session_memo, t
+from .common import memo, t
 from .similarity import QUERY_STRIDE, TOP_K, _dbl, _dot
 
 K_CELLS = 16
@@ -117,14 +117,20 @@ def make_pair_scorer(q_col: str, v_col: str):
     return score
 
 
-# session-scoped memo: the coarse quantizer is shared by sim_topk_kmeans_ivf
-# and the IVF-PQ index (pq.py); training it once per sf_dir mirrors the
-# replay._DECISIONS_CACHE precedent. Assignments stay a cached DataFrame.
-# Keyed by (session, sf_dir) so a new session never sees a dead DataFrame.
-_FIT_CACHE: dict[tuple[int, str], tuple] = session_memo({})
-
-
 def fit_kmeans_cells(spark: SparkSession, sf_dir: str, exclude_delta_mod: int | None = None):
+    """Memoized _fit_kmeans_cells: the coarse quantizer is shared by
+    sim_topk_kmeans_ivf and the IVF-PQ index (pq.py), trained once per
+    (session, sf_dir, exclude_delta_mod)."""
+    return memo(
+        spark,
+        sf_dir,
+        "kmeans_fit",
+        lambda: _fit_kmeans_cells(spark, sf_dir, exclude_delta_mod),
+        exclude_delta_mod,
+    )
+
+
+def _fit_kmeans_cells(spark: SparkSession, sf_dir: str, exclude_delta_mod: int | None):
     """Lloyd's on the KMEANS_FIT_SAMPLE md5-smallest normalized vectors
     (driver-local, bounded — the sample IS the corpus at every gate/bench
     scale), then one distributed mapInPandas pass assigns the full corpus
@@ -138,10 +144,6 @@ def fit_kmeans_cells(spark: SparkSession, sf_dir: str, exclude_delta_mod: int | 
 
     Returns (assignments DataFrame [vec_id, cell], centroids ndarray)."""
     import numpy as np
-
-    memo_key = (app_key(spark), sf_dir, exclude_delta_mod)
-    if memo_key in _FIT_CACHE:
-        return _FIT_CACHE[memo_key]
 
     emb = t(spark, sf_dir, "embeddings")
     if exclude_delta_mod is not None:
@@ -219,8 +221,7 @@ def fit_kmeans_cells(spark: SparkSession, sf_dir: str, exclude_delta_mod: int | 
     # assignments is materialized in its own cache; the normalized-corpus
     # cache is no longer needed
     nemb.unpersist()
-    _FIT_CACHE[memo_key] = (assignments, np.round(C, 6))
-    return _FIT_CACHE[memo_key]
+    return assignments, np.round(C, 6)
 
 
 def sim_topk_kmeans_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:

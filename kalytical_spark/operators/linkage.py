@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import session_memo, t
+from .common import memo, t
 
 PLANT_OFFSET = 9 << 40
 PLANT_MOD = 89
@@ -73,22 +73,17 @@ def _universe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return part.unionByName(mutated)
 
 
-# session-scoped memo (the kmeans_ivf._FIT_CACHE convention): the blocked
-# pair frame feeds BOTH the weights report and the scoring pass — without
-# it each query re-runs the levenshtein verification over every pair
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
-
-
 def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked candidate pairs with the four agreement flags, cached per
-    (session, sf_dir). The $10 price bucket goes through an exact decimal
-    cents cast (a double*100 truncation would misbucket the .99
-    boundary)."""
-    from .common import app_key
+    """Blocked candidate pairs with the four agreement flags, cached and
+    memoized per (session, sf_dir): the pair frame feeds BOTH the weights
+    report and the scoring pass — without the memo each query re-runs the
+    levenshtein verification over every pair."""
+    return memo(spark, sf_dir, "linkage_pairs", lambda: _blocked_pairs(spark, sf_dir))
 
-    memo_key = (app_key(spark), sf_dir)
-    if memo_key in _PAIRS_CACHE:
-        return _PAIRS_CACHE[memo_key]
+
+def _blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The $10 price bucket goes through an exact decimal cents cast (a
+    double*100 truncation would misbucket the .99 boundary)."""
     u = _universe(spark, sf_dir)
     sides = {}
     for s in ("a", "b"):
@@ -102,7 +97,7 @@ def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT) div 1000"
             ).alias(f"pb_{s}"),
         )
-    pairs = (
+    return (
         sides["a"]
         .join(sides["b"], "p_size")
         .filter(F.col("key_a") < F.col("key_b"))
@@ -116,8 +111,6 @@ def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _PAIRS_CACHE[memo_key] = pairs
-    return pairs
 
 
 def _weights(pairs: DataFrame) -> DataFrame:

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import session_memo, t
+from .common import memo, t
 
 EPOCHS = 8
 
@@ -53,23 +53,20 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# session-scoped memo (the kmeans_ivf._FIT_CACHE convention): training is
-# a fixed 8-epoch job shared by the trajectory query AND the calibration
-# report — the localCheckpoint chain makes re-entry cheap, but not free
-_TRAIN_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
-
-
 def quality_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The training trajectory: one row per epoch with the misclassified
     count under the INCOMING weights and the weight vector AFTER the
     epoch's summed update. Epoch 1 starts from w = 0 (margin 0 counts as
     misclassified, the standard convention), so the first update is the
-    class-weighted feature sum — every later row pins the full history."""
-    from .common import app_key
+    class-weighted feature sum — every later row pins the full history.
 
-    memo_key = (app_key(spark), sf_dir)
-    if memo_key in _TRAIN_CACHE:
-        return _TRAIN_CACHE[memo_key]
+    Memoized: training is a fixed 8-epoch job shared by the trajectory
+    query AND the calibration report — the localCheckpoint chain makes
+    re-entry cheap, but not free."""
+    return memo(spark, sf_dir, "perceptron_train", lambda: _train(spark, sf_dir))
+
+
+def _train(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = _features(spark, sf_dir)
     w = spark.createDataFrame([tuple([0] * _D)], ", ".join(f"w{i} long" for i in range(_D)))
     margin = "y * (" + " + ".join(f"w{i} * x{i}" for i in range(_D)) + ")"
@@ -100,9 +97,7 @@ def quality_perceptron_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = reports[0]
     for df in reports[1:]:
         out = out.unionByName(df)
-    out = out.localCheckpoint()
-    _TRAIN_CACHE[memo_key] = out
-    return out
+    return out.localCheckpoint()
 
 
 def _oracle_ctes() -> str:

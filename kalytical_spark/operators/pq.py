@@ -37,7 +37,7 @@ from .kmeans_ivf import (
     make_probe,
 )
 from .similarity import QUERY_STRIDE, TOP_K
-from .common import app_key, session_memo, t
+from .common import eager_cache, memo, t
 
 PQ_M = 8  # subspaces
 PQ_KS = 16  # codes per subspace (fits 4 bits; stored as int)
@@ -131,20 +131,16 @@ def _train_codebooks(spark: SparkSession, sf_dir: str):
     return assignments, C, np.round(B, 6), nemb
 
 
-# session memo: the trained+encoded PQ index is shared by sim_topk_ivfpq
-# and its verified twin (ann_verify.py) — same convention as
-# kmeans_ivf._FIT_CACHE (one fit per (session, sf_dir)).
-_PQ_CACHE: dict[tuple[str, str], tuple] = session_memo({})
-
-
 def _pq_index(spark: SparkSession, sf_dir: str):
     """(encoded cached DF [vec_id, cell, codes], centroids C, codebooks B)
-    — the stored IVF-PQ index artifact, memoized per (session, sf_dir)."""
+    — the stored IVF-PQ index artifact, memoized per (session, sf_dir):
+    sim_topk_ivfpq and its verified twin (ann_verify.py) share one fit."""
+    return memo(spark, sf_dir, "pq_codebooks", lambda: _build_pq_index(spark, sf_dir))
+
+
+def _build_pq_index(spark: SparkSession, sf_dir: str):
     import numpy as np
 
-    key = (app_key(spark), sf_dir)
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
     assignments, C, B, joined_nemb = _train_codebooks(spark, sf_dir)
     dim = C.shape[1]
     dsub = dim // PQ_M
@@ -169,13 +165,11 @@ def _pq_index(spark: SparkSession, sf_dir: str):
                 }
             )
 
-    encoded = joined_nemb.mapInPandas(
-        encode, schema="vec_id long, cell int, codes array<int>"
-    ).cache()
-    encoded.count()
+    encoded = eager_cache(
+        joined_nemb.mapInPandas(encode, schema="vec_id long, cell int, codes array<int>")
+    )
     joined_nemb.unpersist()
-    _PQ_CACHE[key] = (encoded, C, B)
-    return _PQ_CACHE[key]
+    return encoded, C, B
 
 
 def pq_shortlist(spark: SparkSession, sf_dir: str) -> DataFrame:

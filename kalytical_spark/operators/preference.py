@@ -31,43 +31,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .common import app_key, eager_cache, session_memo, t
+from .common import eager_cache, memo, t
 
 BT_ITERS = 8
 _S = 1_000_000_000  # per-pair contribution scale
 _P0 = 1_000_000  # initial strength (micro-units)
 
-# memoized per (app, sf_dir): the fit AND the calibration readout both
-# consume the mined pair matrix — without the memo each call re-ran the
-# corpus-sized per-user pair rollup (ADVICE r7)
-_WIN_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
-
-
 def _win_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(ta, tb, w_a, w_b) with ta < tb: per unordered type pair, how many
     users preferred (engaged more with) each side. One events rollup plus
     a per-user self-join bounded by the type dimension; K^2-bounded
-    output, cached eagerly (it is a model table, not corpus data)."""
-    key = (app_key(spark), sf_dir)
-    if key in _WIN_CACHE:
-        return _WIN_CACHE[key]
-    ev = t(spark, sf_dir, "events_ms")
-    counts = ev.groupBy("user_id", "event_type").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
-    a = counts.select("user_id", F.col("event_type").alias("ta"), F.col("c").alias("ca"))
-    b = counts.select("user_id", F.col("event_type").alias("tb"), F.col("c").alias("cb"))
-    out = eager_cache(
-        a.join(b, ["user_id"])
-        .filter(F.col("ta") < F.col("tb"))
-        .groupBy("ta", "tb")
-        .agg(
-            F.sum((F.col("ca") > F.col("cb")).cast("bigint")).alias("w_a"),
-            F.sum((F.col("cb") > F.col("ca")).cast("bigint")).alias("w_b"),
+    output, cached eagerly (it is a model table, not corpus data).
+    Memoized: the fit AND the calibration readout both consume it —
+    without the memo each call re-ran the corpus-sized per-user pair
+    rollup (ADVICE r7)."""
+
+    def build():
+        ev = t(spark, sf_dir, "events_ms")
+        counts = ev.groupBy("user_id", "event_type").agg(
+            F.count("*").cast("bigint").alias("c")
         )
-    )
-    _WIN_CACHE[key] = out
-    return out
+        a = counts.select("user_id", F.col("event_type").alias("ta"), F.col("c").alias("ca"))
+        b = counts.select("user_id", F.col("event_type").alias("tb"), F.col("c").alias("cb"))
+        return eager_cache(
+            a.join(b, ["user_id"])
+            .filter(F.col("ta") < F.col("tb"))
+            .groupBy("ta", "tb")
+            .agg(
+                F.sum((F.col("ca") > F.col("cb")).cast("bigint")).alias("w_a"),
+                F.sum((F.col("cb") > F.col("ca")).cast("bigint")).alias("w_b"),
+            )
+        )
+
+    return memo(spark, sf_dir, "preference_wins", build)
 
 
 def users_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:

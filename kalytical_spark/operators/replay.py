@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..streaming.transitions import TriggerState, apply_delivery, sources_repr
-from .common import app_key, eager_cache, session_memo, t
+from .common import eager_cache, memo, t
 
 _DECISION_SCHEMA = T.StructType(
     [
@@ -78,11 +78,6 @@ def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-# per-(session, sf) cache: the summary and downstream consumers reuse the
-# folded ledger instead of recomputing the whole replay
-_DECISIONS_CACHE: dict[tuple[int, str], DataFrame] = session_memo({})
-
-
 def _fires_simple(deliveries: DataFrame) -> DataFrame:
     """Fire ledger for 'any' and single-dep pipelines: every delivery fires
     (dispatcher.py:41-42), so seq/sources come from a pure-JVM window — no
@@ -114,16 +109,15 @@ def dag_replay_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset. Both paths share the transition semantics pinned by tests, and
     the WHOLE ledger (fold included) is value-proven against
     ORACLE_REPLAY_DECISIONS's recursive-CTE twin.
+
+    Memoized: downstream consumers (retry ledger, credit queries) reuse
+    the folded ledger instead of recomputing the whole replay. Eager: it
+    materializes before any of them plans, so AQE sees final cache
+    statistics (common.eager_cache).
     """
-    key = (app_key(spark), sf_dir)
-    if key in _DECISIONS_CACHE:
-        return _DECISIONS_CACHE[key]
-    # eager: the ledger feeds multiple downstream consumers (summary,
-    # retry ledger, credit queries) — materialize before any of them
-    # plans, so AQE sees final cache statistics (common.eager_cache)
-    out = eager_cache(replay_decisions_plan(spark, sf_dir))
-    _DECISIONS_CACHE[key] = out
-    return out
+    return memo(
+        spark, sf_dir, "replay_decisions", lambda: eager_cache(replay_decisions_plan(spark, sf_dir))
+    )
 
 
 def replay_decisions_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,16 +149,9 @@ def dag_replay_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Since the output keeps ONLY the simple subset, it aggregates the
     pure-JVM simple-fire ledger directly: the applyInPandas fold for
     multi-dep pipelines never runs on this path (it would be computed and
-    then filtered away). A warm decisions cache is still preferred — its
-    simple rows are identical by construction.
+    then filtered away).
     """
-    key = (app_key(spark), sf_dir)
-    if key in _DECISIONS_CACHE:
-        dec = _DECISIONS_CACHE[key].filter(
-            (F.col("trigger_operator") == "any") | (F.col("n_deps") == 1)
-        )
-    else:
-        dec = _fires_simple(_deliveries(spark, sf_dir))
+    dec = _fires_simple(_deliveries(spark, sf_dir))
     return dec.groupBy("pipeline_uuid", "trigger_operator", "n_deps").agg(
         F.count("*").alias("n_fires"),
         F.max("seq").alias("max_seq"),

@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .common import app_key, session_memo, t
+from .common import eager_cache, memo, t
 
 # --- HyperLogLog: p = 6 bits -> m = 64 registers --------------------------
 
@@ -327,27 +327,19 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Session memo of the support-thresholded co-purchase edge list — the
-# shared graph artifact under FIVE queries (triangle census, clustering
-# coefficient, k-core, label propagation, link prediction), each of which
-# previously re-ran the lineitem group/expand/support mine per invocation
-# (guide §2.4: the repeated subtree is a removable pass; same pattern as
-# dedup.shingle_table). In production the co-purchase graph is a stored
-# artifact refreshed on its own cadence; bench.py prepays the build as an
-# explicit memo:copurchase_edges line so query lines stay comparable.
-_COPURCHASE_CACHE: dict[tuple[str, str], DataFrame] = session_memo({})
-
-
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memo-cached `_copurchase_edges` (same rows, cached once per
     session+sf): the uncached builder stays the structural source of truth
-    for plan audits."""
-    memo_key = (app_key(spark), sf_dir)
-    if memo_key not in _COPURCHASE_CACHE:
-        edges = _copurchase_edges(spark, sf_dir).cache()
-        edges.count()
-        _COPURCHASE_CACHE[memo_key] = edges
-    return _COPURCHASE_CACHE[memo_key]
+    for plan audits. The support-thresholded co-purchase edge list is the
+    shared graph artifact under FIVE queries (triangle census, clustering
+    coefficient, k-core, label propagation, link prediction), each of
+    which previously re-ran the lineitem group/expand/support mine per
+    invocation (guide §2.4: the repeated subtree is a removable pass). In
+    production the co-purchase graph is a stored artifact refreshed on
+    its own cadence."""
+    return memo(
+        spark, sf_dir, "copurchase_edges", lambda: eager_cache(_copurchase_edges(spark, sf_dir))
+    )
 
 
 def _degrees(und: DataFrame) -> DataFrame:

@@ -147,20 +147,20 @@ def test_audit_cache_invariant_and_releases_storage(spark, monkeypatch):
     )
 
 
-def test_twin_summary_is_session_memoized(spark):
+def test_twin_summary_is_memoized(spark):
     """The 1-row audit summary is memoized per (app, sf_dir, twin) — the
     r10 cache-release hygiene otherwise made every invocation (bench
     median-of-3 included) re-pay the production search plus candidate
-    generation plus three audit legs (VERDICT r10 task 2). The memo must
-    be registered with the session-reset registry so hermetic tooling
-    still gets fresh builds."""
-    from kalytical_spark.operators.common import SESSION_MEMOS
+    generation plus three audit legs (VERDICT r10 task 2). The session
+    reset must drop it so hermetic tooling still gets fresh builds."""
+    from kalytical_spark.operators.common import reset_session_state
 
     fn, _oracle = ann_verify.QUERIES["sim_topk_kmeans_ivf_verified"]
     a = fn(spark, SF_SMALL)
     b = fn(spark, SF_SMALL)
     assert a is b, "second call must return the memoized local relation"
-    assert any(d is ann_verify._SUMMARY_CACHE for d in SESSION_MEMOS)
+    reset_session_state(spark)
+    assert fn(spark, SF_SMALL) is not a, "reset must force a fresh build"
 
 
 def test_teeth_non_dense_ranks(spark, kmeans_parts):

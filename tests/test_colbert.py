@@ -6,9 +6,9 @@ deterministically."""
 from __future__ import annotations
 
 from kalytical_spark.operators.colbert import (
-    _TOK_FIT_CACHE,
     MAXSIM_NTOK,
     N_PROBE_TOK,
+    _fit_token_cells,
     fit_token_cells,
     sim_maxsim_ivf_pruned,
     sim_maxsim_pruned_recall_report,
@@ -42,8 +42,7 @@ def test_token_fit_deterministic(spark):
 
     postings1, C1 = fit_token_cells(spark, SF_SMALL)
     p1 = sorted((r.vec_id, r.cell) for r in postings1.collect())
-    _TOK_FIT_CACHE.clear()
-    postings2, C2 = fit_token_cells(spark, SF_SMALL)
+    postings2, C2 = _fit_token_cells(spark, SF_SMALL)
     p2 = sorted((r.vec_id, r.cell) for r in postings2.collect())
     assert np.array_equal(C1, C2)
     assert p1 == p2
@@ -66,14 +65,11 @@ def test_fit_paths_bit_identical(spark, monkeypatch):
 
     from kalytical_spark.operators import colbert
 
-    _TOK_FIT_CACHE.clear()
-    postings_d, C_d = fit_token_cells(spark, SF_SMALL)
+    postings_d, C_d = _fit_token_cells(spark, SF_SMALL)
     pd_ = sorted((r.vec_id, r.cell) for r in postings_d.collect())
-    _TOK_FIT_CACHE.clear()
     monkeypatch.setattr(colbert, "_TOK_DRIVER_FIT_MAX_K", -1)
-    postings_x, C_x = fit_token_cells(spark, SF_SMALL)
+    postings_x, C_x = _fit_token_cells(spark, SF_SMALL)
     px = sorted((r.vec_id, r.cell) for r in postings_x.collect())
-    _TOK_FIT_CACHE.clear()
     assert np.array_equal(C_d, C_x)
     assert pd_ == px
 

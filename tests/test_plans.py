@@ -292,32 +292,62 @@ def test_spread_guard_refuses_derived_frames(spark):
 
 
 def test_sf_switch_evicts_stale_memos(spark):
-    """catalog.register() on an sf_dir SWITCH must evict this session's
-    operator memos keyed on the old sf_dir (ADVICE r11): temp views are
-    single-sf_dir per session, so a stale-sf memo can never be read again
-    — leaving it cached accumulates dead blocks across the driver's
-    smoke+gate flow."""
-    from kalytical_spark import catalog
-    from kalytical_spark.operators.common import SESSION_MEMOS, app_key
-
-    from kalytical_spark.operators import similarity
+    """catalog.register() on an sf_dir SWITCH must evict this app's memos
+    keyed on the old sf_dir — whatever parameters the memo carries (the
+    k-means fit memo is also keyed by its delta exclusion, the ANN twins
+    by their name): temp views are single-sf_dir per session, so a
+    stale-sf memo can never be read again, and leaving it cached
+    accumulates dead blocks across the driver's smoke+gate flow."""
+    from kalytical_spark.operators import ann_verify, kmeans_ivf, similarity
 
     catalog.register(spark, SF_SMALL)
-    similarity.exact_topk_memo(spark, SF_SMALL)
-    app = app_key(spark)
+    builds = {
+        "exact_topk": lambda: similarity.exact_topk_memo(spark, SF_SMALL),
+        "kmeans_fit": lambda: kmeans_ivf.fit_kmeans_cells(spark, SF_SMALL),
+        "twin": lambda: ann_verify.sim_topk_kmeans_ivf_verified(spark, SF_SMALL),
+    }
+    held = {name: build() for name, build in builds.items()}
+    assert all(build() is held[name] for name, build in builds.items())
+    cached = [held["exact_topk"], held["kmeans_fit"][0]]
+    assert all(df.is_cached for df in cached)
 
-    def stale_entries():
-        return [
-            (id(d), k)
-            for d in SESSION_MEMOS
-            for k in d
-            if isinstance(k, tuple)
-            and len(k) == 2
-            and k[0] == app
-            and isinstance(k[1], str)
-            and k[1] == SF_SMALL
-        ]
-
-    assert stale_entries(), "memo for the first sf_dir should exist"
     catalog.register(spark, SF_ORACLE)
-    assert not stale_entries(), "sf switch must evict the old sf_dir's memos"
+    assert not any(df.is_cached for df in cached), "stale memo blocks must be unpersisted"
+    stale = [name for name, build in builds.items() if build() is held[name]]
+    assert not stale, f"sf switch must evict the old sf_dir's memos: {stale}"
+
+
+def test_sf_switch_keeps_memos_of_sibling_sessions(spark):
+    """Sibling sessions of one app share memos, but each registers its own
+    sf_dir: a switch may only evict the memos of an sf_dir that NO session
+    of the app still has registered."""
+    from kalytical_spark.operators import similarity
+
+    sibling = spark.newSession()
+    catalog.register(sibling, SF_SMALL)
+    catalog.register(spark, SF_SMALL)
+    held = similarity.exact_topk_memo(sibling, SF_SMALL)
+    catalog.register(spark, SF_ORACLE)
+    assert similarity.exact_topk_memo(sibling, SF_SMALL) is held
+    assert held.is_cached
+    # the last session leaves sf0.001: now its memos go
+    catalog.register(sibling, SF_ORACLE)
+    assert not held.is_cached
+
+
+def test_memo_keys_are_built_only_by_common():
+    """Every session memo goes through operators.common.memo(): a module
+    that calls app_key( itself is hand-rolling a memo key, the pattern
+    whose copies drifted apart (a switch evictor that matched only one
+    key shape)."""
+    import pathlib
+
+    import kalytical_spark
+
+    root = pathlib.Path(kalytical_spark.__file__).parent
+    offenders = [
+        str(path.relative_to(root))
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "operators" / "common.py" and "app_key(" in path.read_text()
+    ]
+    assert not offenders, f"hand-rolled memo keys (use common.memo): {offenders}"

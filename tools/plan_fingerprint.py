@@ -1,10 +1,11 @@
-"""Plan-fingerprint regression gate (PLANS.md, promoted to CI): the
-operator MULTISET of each headline query's executed physical plan, pinned
-to tests/plan_fingerprints.json. An unintended new Exchange (someone adds a
-repartition(), a join flips broadcast->sort-merge, a codegen expression
-falls back to Python eval) changes the multiset and fails the test — cheap
-insurance across a 180-query registry where a single plan regression would
-otherwise hide inside total wall time.
+"""Plan-fingerprint regression gate (the plans tools/dump_plan.py writes
+to plans/, promoted to CI): the operator MULTISET of each headline query's
+executed physical plan, pinned to tests/plan_fingerprints.json. An
+unintended new Exchange (someone adds a repartition(), a join flips
+broadcast->sort-merge, a codegen expression falls back to Python eval)
+changes the multiset and fails the test — cheap insurance across a
+180-query registry where a single plan regression would otherwise hide
+inside total wall time.
 
 The fingerprint counts only load-bearing operator classes (shuffles,
 broadcasts, join strategies, aggregates, Python-eval nodes, windows) —
@@ -99,7 +100,7 @@ def _walk_counts(jnode, out: dict[str, int]) -> None:
 def fingerprint(df_or_build, spark=None) -> dict[str, int]:
     """Count load-bearing operators of the executed plan — defined as the
     STATIC physical plan: the query runs with AQE DISABLED for exactly
-    this execution, from a reset session (caches + module memos cleared,
+    this execution, from a reset session (caches + memos cleared,
     then every session-tracked cache force-materialized before the
     measured query so planner statistics are final — see
     common.reset_session_state / materialize_session_caches).
